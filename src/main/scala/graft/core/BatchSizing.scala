@@ -19,13 +19,6 @@ object BatchSizing {
     math.max(MinBatch, math.min(MaxBatch, rows)).toInt
   }
 
-  /** Size from the running JVM (driver-side loops). */
-  def optimalBatchSizeHere(): Int = {
-    val rt = Runtime.getRuntime
-    val available = rt.maxMemory() - (rt.totalMemory() - rt.freeMemory())
-    optimalBatchSize(available)
-  }
-
   /** Byte-aware batch target (~10 MB, ≤1000 rows, ≥1) for width-skewed
     * rows — the JSONB writer's sizing (`src/jsonb/writer.rs:406-436`). */
   def byteAwareBatchRows(avgRowBytes: Long, targetBytes: Long = 10L << 20,

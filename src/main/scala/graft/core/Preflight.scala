@@ -80,8 +80,5 @@ object Preflight {
     Seq(checkConnectivity(conn), checkVersion(conn)) ++
       tables.map { case (s, t) => checkTableSelect(conn, s, t) }
 
-  def runTargetChecks(conn: Connection): Seq[CheckResult] =
-    Seq(checkConnectivity(conn), checkVersion(conn), checkCreateDb(conn))
-
   def allOk(results: Seq[CheckResult]): Boolean = results.forall(_.ok)
 }

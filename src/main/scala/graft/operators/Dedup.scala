@@ -689,7 +689,10 @@ object Dedup {
     * `planted` rides broadcast — nothing here rescans the corpus. */
   def detectionReport(planted: DataFrame,
                       stages: Seq[(String, DataFrame)]): DataFrame = {
-    val nPlanted = planted.count()
+    // recall's denominator counts the same distinct pairs the hit count
+    // joins against: a duplicated planted pair is still one pair
+    val plantedPairs = planted.select(col("id_a"), col("id_b")).distinct()
+    val nPlanted = plantedPairs.count()
     // one broadcast LEFT join + ONE aggregate per stage (round-16): the
     // previous two-aggregate form (count pairs; count pairs⋈planted)
     // evaluated each stage's `flagged` subtree TWICE in the same plan —
@@ -698,9 +701,7 @@ object Dedup {
     // pair with planted membership, so both counts fold in a single
     // pass: count(*) = n_flagged exactly (planted pairs are distinct'd,
     // so the join never multiplies rows), count(__p) = n_hit.
-    val plantedTag = broadcast(
-      planted.select(col("id_a"), col("id_b")).distinct()
-        .withColumn("__p", lit(1)))
+    val plantedTag = broadcast(plantedPairs.withColumn("__p", lit(1)))
     stages.map { case (name, flagged) =>
       flagged.select(col("id_a"), col("id_b"))
         .join(plantedTag, Seq("id_a", "id_b"), "left")

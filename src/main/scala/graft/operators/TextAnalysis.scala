@@ -674,12 +674,14 @@ object TextAnalysis {
     // nTokens (an input the caller already computed) bounds the bigram
     // vocabulary, so a small corpus broadcasts with NO extra job; only a
     // corpus whose token count leaves the question open pays the
-    // persist+count probe.
+    // persist+count probe. That persist is registered in the bounded
+    // sliver FIFO ([[graft.core.SliverCache]]), so it is reclaimed by
+    // eviction or a session clear instead of pinned for the session.
     val MaxBroadcastVocab = 4000000L
     val costSide =
       if (nTokens <= MaxBroadcastVocab) broadcast(biCost)
       else {
-        val biCostP = biCost.persist()
+        val biCostP = graft.core.SliverCache.persistBounded(biCost)
         if (biCostP.count() <= MaxBroadcastVocab) broadcast(biCostP) else biCostP
       }
     val docBi = bigrams.join(costSide, Seq("prev", "tok"))

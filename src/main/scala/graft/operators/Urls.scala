@@ -57,11 +57,6 @@ object Urls {
         .otherwise(lit("")))
   }
 
-  /** The 2-label public suffixes recognized by [[registeredDomain]] —
-    * loaded from the bundled snapshot ([[PublicSuffixes.suffixes2]]);
-    * kept under this name as the anchor the oracle replay interpolates. */
-  def publicSuffixes2: Seq[String] = PublicSuffixes.suffixes2
-
   /** Registered ("pay-level") domain of a lowercased host, per the
     * bundled [[PublicSuffixes]] rule set, PSL match order: exception
     * hosts (`!www.ck`, `!city.kawasaki.jp`) are themselves registered

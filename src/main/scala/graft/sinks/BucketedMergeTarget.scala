@@ -643,8 +643,11 @@ object BucketedMergeTarget {
         pruned.filter(col(probeCol).isInCollection(distinctKeys))
       else {
         import scala.jdk.CollectionConverters._
+        // null never equals anything: drop null probe keys before they
+        // reach the non-nullable relation, so a null key matches nothing
+        // here exactly as it does on the isInCollection path
         val keyRel = spark.createDataFrame(
-          distinctKeys.map(k => Row(k)).asJava,
+          distinctKeys.filter(_ != null).map(k => Row(k)).asJava,
           StructType(Seq(org.apache.spark.sql.types.StructField(
             probeCol, keyType, nullable = false))))
         pruned.join(broadcast(keyRel), Seq(probeCol), "left_semi")

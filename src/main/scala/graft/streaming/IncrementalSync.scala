@@ -44,10 +44,6 @@ object IncrementalSync {
     if (row.isNullAt(0)) previous else row.getAs[Number](0).longValue()
   }
 
-  /** `estimate_changes` (`src/xmin/reader.rs:317-336`). */
-  def estimateChanges(df: DataFrame, versionCol: String, watermark: Long): Long =
-    df.filter(col(versionCol) > watermark).count()
-
   /** `_latest`-table materialization (`src/commands/sync_sqlite.rs:166-202`):
     * newest change per key wins. Implemented as max_by over the cursor —
     * a single hash aggregation (map-side combinable), not a global

@@ -65,12 +65,6 @@ object LogicalReplication {
       s"CONNECTION ${quoteLiteral(sourceConnection)} " +
       s"PUBLICATION ${quoteIdent(publicationName)}"
 
-  def dropPublicationSql(name: String): String =
-    s"DROP PUBLICATION IF EXISTS ${quoteIdent(name)}"
-
-  def dropSubscriptionSql(name: String): String =
-    s"DROP SUBSCRIPTION IF EXISTS ${quoteIdent(name)}"
-
   /** `srsubstate` → human state (`subscription.rs:245-251`). */
   sealed trait SubState
   object SubState {

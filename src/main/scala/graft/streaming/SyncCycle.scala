@@ -3,8 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Reconcile
-
 /** One xmin-style sync cycle — the dataflow of the reference's
   * `SyncDaemon::sync_table` (`src/xmin/daemon.rs:336-461`):
   *
@@ -37,11 +35,6 @@ object SyncCycle {
     * the source (the positive form of the anti-join orphan set). */
   def deleteOrphans(target: DataFrame, source: DataFrame, pkCols: Seq[String]): DataFrame =
     target.join(source.select(pkCols.map(col): _*).distinct(), pkCols, "left_semi")
-
-  /** Orphan keys that WOULD be deleted (delegates to [[Reconcile]] —
-    * the J1/J2 anti-join). */
-  def orphanKeys(target: DataFrame, source: DataFrame, pkCols: Seq[String]): DataFrame =
-    Reconcile.orphanedKeys(source, target, pkCols)
 
   /** Run one full cycle, returning the new target frame + report.
     * `reconcile=true` adds the delete pass (the reference runs it on its

@@ -5,9 +5,9 @@ import java.nio.file.{Files, Path}
 /** WAL-file growth watching (S24) — the reference's sqlite-watcher polls
   * the `<db>-wal` file size every 500 ms and emits growth events,
   * handling truncation (checkpoint) as a size reset
-  * (`sqlite-watcher/src/wal.rs:47-124`). Same semantics here as a pure
-  * poll-step function plus a loop driver — the step is what gets tested,
-  * and what a Structured Streaming custom source would wrap.
+  * (`sqlite-watcher/src/wal.rs:47-124`). Same semantics here as a
+  * pure poll-step function — what gets tested, and what a Structured
+  * Streaming custom source would wrap.
   */
 object WalWatcher {
 
@@ -26,21 +26,5 @@ object WalWatcher {
       (State(size), None) // truncated by checkpoint — new baseline
     else
       (state, None)
-  }
-
-  /** Poll loop: run `polls` steps at `intervalMs`, feeding events to the
-    * callback (the reference's default interval is 500 ms). */
-  def watch(walPath: Path, polls: Int, intervalMs: Long = 500)(
-      onEvent: WalEvent => Unit): State = {
-    var state = State(if (Files.exists(walPath)) Files.size(walPath) else 0L)
-    var i = 0
-    while (i < polls) {
-      Thread.sleep(intervalMs)
-      val (next, event) = step(walPath, state)
-      event.foreach(onEvent)
-      state = next
-      i += 1
-    }
-    state
   }
 }

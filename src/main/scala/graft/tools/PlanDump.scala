@@ -47,8 +47,6 @@ object PlanDump {
 /** Session-state clear shared by dev tools (mirrors Bench's isolation). */
 private[tools] object QueriesToolSupport {
   def clear(spark: org.apache.spark.sql.SparkSession): Unit = {
-    graft.QueriesPipeline.invalidateLshCache()
-    graft.QueriesPipeline.invalidateAnnExactCache()
     graft.core.SliverCache.clear()
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))

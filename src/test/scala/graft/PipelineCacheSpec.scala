@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The LSH candidate memo's staleness contract is enforced by DATA
@@ -53,30 +54,49 @@ class PipelineCacheSpec extends AnyFunSuite {
     graft.QueriesPipeline.invalidateLshCache(Some(dir))
   }
 
+  test("scratchBuckets fails loudly on a missing table") {
+    val dir = Files.createTempDirectory("no-table").toString
+    intercept[java.io.FileNotFoundException] {
+      QueriesPipeline.scratchBuckets(spark, dir, "documents")
+    }
+  }
+
   test("evictSuperseded: a same-plan predecessor must NOT uncache the replacement") {
     // CacheManager keys entries by canonicalized plan, not handle: a
     // rerun that registers a fresh frame with the identical plan and
     // then unpersists its predecessor removes the entry the fresh frame
     // just created (measured at the 100× rung: the rerun probe re-ran
     // q_curation_pipeline_v3 at 19× its recorded time because every
-    // rerun uncached its own gate set at registration).
+    // rerun uncached its own gate set at registration). The keyed
+    // registry's replace path must keep that guard.
     val s = spark
     import s.implicits._
+    import graft.core.SliverCache
+    val dir = Files.createTempDirectory("supersede").toString
+    val key = SliverCache.Key(s, dir, "gate", "fp")
     val mk = () => Seq((1L, "a"), (2L, "b")).toDF("id", "t").filter(col("id") > 0)
-    val old = mk().persist()
-    old.count()
-    val nu = mk() // identical canonical plan — shares old's cache entry
-    assert(nu.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
-      "same-plan frame should report the shared cache entry")
-    graft.QueriesPipeline.evictSuperseded(old, nu)
-    assert(nu.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
-      "evicting a same-plan predecessor destroyed the replacement's cache entry")
     // a genuinely different predecessor IS released
     val other = Seq((9L, "z")).toDF("id", "t").persist()
     other.count()
-    graft.QueriesPipeline.evictSuperseded(other, nu)
-    assert(other.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+    SliverCache.put(key, other)
+    val old = mk().persist()
+    old.count()
+    SliverCache.put(key, old)
+    assert(other.storageLevel == StorageLevel.NONE,
       "different-plan predecessor should be unpersisted")
-    nu.unpersist()
+    val nu = mk() // identical canonical plan — shares old's cache entry
+    assert(nu.storageLevel != StorageLevel.NONE,
+      "same-plan frame should report the shared cache entry")
+    SliverCache.put(key, nu)
+    assert(nu.storageLevel != StorageLevel.NONE,
+      "evicting a same-plan predecessor destroyed the replacement's cache entry")
+    // the same guard holds when the replaced entry was memo-built
+    val key2 = SliverCache.Key(s, dir, "gate2", "fp")
+    val built = SliverCache.memo(key2)(mk().filter(col("id") < 5).persist())
+    SliverCache.put(key2, mk().filter(col("id") < 5))
+    assert(built.storageLevel != StorageLevel.NONE)
+    SliverCache.invalidate("gate", Some(dir))
+    SliverCache.invalidate("gate2", Some(dir))
+    assert(nu.storageLevel == StorageLevel.NONE && built.storageLevel == StorageLevel.NONE)
   }
 }

@@ -33,7 +33,7 @@ class PlanSpec extends AnyFunSuite {
       s"${rawDocScans.length} stage(s) re-scan documents.parquet past the cache")
     assert(lp.collectLeaves().exists(_.isInstanceOf[InMemoryRelation]),
       "pipeline stages do not read the cached base at all")
-    graft.QueriesPipeline.releaseCurationCache(spark, dir)
+    graft.core.SliverCache.clear()
   }
 
   test("q_curation_pipeline_v2 folds the Gopher gate in while still reading ONE scan") {
@@ -48,7 +48,7 @@ class PlanSpec extends AnyFunSuite {
       s"${rawDocScans.length} stage(s) re-scan documents.parquet past the cache")
     assert(lp.collectLeaves().exists(_.isInstanceOf[InMemoryRelation]),
       "pipeline stages do not read the cached base at all")
-    graft.QueriesPipeline.releaseCurationCache(spark, dir)
+    graft.core.SliverCache.clear()
   }
 
   test("q_curation_pipeline_v3 derives its thresholds while still reading ONE scan") {
@@ -63,7 +63,7 @@ class PlanSpec extends AnyFunSuite {
       s"${rawDocScans.length} stage(s) re-scan documents.parquet past the cache")
     assert(lp.collectLeaves().exists(_.isInstanceOf[InMemoryRelation]),
       "pipeline stages do not read the cached base at all")
-    graft.QueriesPipeline.releaseCurationCache(spark, dir)
+    graft.core.SliverCache.clear()
   }
 
   test("q_gate_thresholds_approx derives cutoffs with NO global window (sketch path)") {
@@ -82,7 +82,7 @@ class PlanSpec extends AnyFunSuite {
       "expected the percentile_approx aggregate in the plan")
     assert(pStr.contains("partial_percentile_approx"),
       "sketch must partial-aggregate map-side (partial_percentile_approx)")
-    graft.QueriesPipeline.releaseCurationCache(spark, dir)
+    graft.core.SliverCache.clear()
   }
 
   test("threshold CONSUMERS run the sketch path: no empty-partition window " +
@@ -101,7 +101,7 @@ class PlanSpec extends AnyFunSuite {
       assert(global.isEmpty,
         s"$name still runs a single-partition global window:\n${global.mkString("\n")}")
     }
-    graft.QueriesPipeline.releaseCurationCache(spark, dir)
+    graft.core.SliverCache.clear()
   }
 
   test("q_predicate pushes filters into the parquet scan") {

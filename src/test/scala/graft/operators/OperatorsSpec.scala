@@ -153,6 +153,11 @@ class OperatorsSpec extends AnyFunSuite {
     assert(out.toSeq == Seq(
       ("candidates", 2L, 3L, 1L, 0.5, 2L),
       ("verified", 2L, 2L, 2L, 1.0, 0L)))
+    // a duplicated planted row is still one pair: recall stays 1.0
+    val dup = Dedup.detectionReport(planted.unionAll(Seq((1L, 101L)).toDF("id_a", "id_b")),
+      Seq("verified" -> ver)).head()
+    assert(dup.getLong(1) == 2L && dup.getLong(3) == 2L && dup.getDouble(4) == 1.0,
+      s"duplicate planted row skewed the report: $dup")
   }
 
   test("hot-bucket cap drops oversized LSH buckets (no quadratic blowup)") {
@@ -1367,6 +1372,23 @@ class OperatorsSpec extends AnyFunSuite {
       docs(9L -> "x x x"), "doc_id", col("text"), 3L).head()
     assert(tiny.getLong(1) == 3L && tiny.getLong(2) == 364644L &&
       tiny.getDouble(3) == 0.121548)
+  }
+
+  test("bigramSurprise's large-corpus cost-table persist is reclaimed by SliverCache.clear()") {
+    // > 4M tokens takes the persist+count path; the vocabulary is tiny
+    val d = spark.range(40100).select(col("id").as("doc_id"),
+      expr("concat_ws(' ', transform(sequence(0, 99), " +
+        "i -> element_at(array('a', 'b', 'c', 'd', 'e'), cast((i * 7 + id) % 5 + 1 as int))))")
+        .as("text"))
+    val nTokens = TextAnalysis.corpusTokenCount(d, col("text"))
+    assert(nTokens > 4000000L)
+    graft.core.SliverCache.clear()
+    spark.catalog.clearCache()
+    val out = TextAnalysis.bigramSurprise(d, "doc_id", col("text"), nTokens)
+    assert(out.filter(col("n_tokens") =!= 100L).count() == 0)
+    graft.core.SliverCache.clear()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "bigramSurprise left a cached plan the sliver registry cannot reclaim")
   }
 
   test("ngramContainment: a strict excerpt scores containment 1.0 at fractional Jaccard") {

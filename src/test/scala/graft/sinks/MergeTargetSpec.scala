@@ -391,6 +391,22 @@ class MergeTargetSpec extends AnyFunSuite {
     assert(hit.collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
 
+  test("readMatchingLocal: a null key in a >10k-key probe matches nothing") {
+    // past 10k keys the probe is a broadcast semi-join against a local
+    // relation of the keys; a null there must degrade to no match, as it
+    // does on the isInCollection path
+    val dir = tmp("mt-local-null").resolve("t").toString
+    BucketedMergeTarget.merge(kv((0L to 20L).map(i => (i, 1L, s"v$i"))), dir, Seq("id"), "cursor", 4)
+    val keys: Seq[Any] = (100L until 10100L) :+ null
+    assert(keys.distinct.size == 10001)
+    val hit = BucketedMergeTarget.readMatchingLocal(spark, dir, "id", keys,
+      org.apache.spark.sql.types.LongType)
+    assert(hit.collect().isEmpty, "a null probe key matched a stored row")
+    val mixed = BucketedMergeTarget.readMatchingLocal(spark, dir, "id", keys :+ 7L,
+      org.apache.spark.sql.types.LongType)
+    assert(mixed.collect().map(_.getLong(0)).toSeq == Seq(7L))
+  }
+
   test("composite PKs bucket and merge correctly") {
     val s = spark
     import s.implicits._
